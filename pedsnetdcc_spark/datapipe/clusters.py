@@ -82,8 +82,13 @@ def connected_components(
     # reuse the one partitioning established here.  The width is the
     # session's configured shuffle parallelism (explicit, so AQE
     # cannot coalesce it away under the small label tables and
-    # re-serialize the rounds).
-    n_part = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # re-serialize the rounds).  A non-integer setting (e.g. "auto" on
+    # some platforms) falls back to the default parallelism.
+    spark = pairs.sparkSession
+    try:
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        n_part = spark.sparkContext.defaultParallelism
     edges = (
         _symmetrize(pairs, src, dst)
         .repartition(n_part, "v")

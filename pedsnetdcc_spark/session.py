@@ -6,6 +6,18 @@ role, so the session here concentrates on the knobs that matter at scale:
 AQE (runtime re-planning, skew-join splitting, partition coalescing),
 shuffle partition count, broadcast threshold, and Arrow for the few
 Pandas-UDF code paths.
+
+Python workers: before CPython 3.13 every Python task (Arrow/pandas UDFs,
+the ``applyInPandasWithState`` runner) re-parsed the whole central
+directory of ``pyspark.zip`` 12-16 times, once per cached ``zipimporter``,
+because PySpark's worker calls ``importlib.invalidate_caches()`` per task:
+~0.2 CPU-s per task even with reused workers (Python-worker CPU of a
+trivial pandas UDF over 32 partitions on ``local[4]``, 4-core x86 VM,
+CPython 3.11.7: 9.4 s before, 2.5 s after).  For ``local[...]`` masters
+the session runs its workers under :mod:`pedsnetdcc_spark.pyworker`,
+whose stat-guarded ``invalidate_caches`` re-reads an archive only when it
+changed.  Other masters keep Spark's default daemon, since their
+executors may not have this package on their path.
 """
 
 from __future__ import annotations
@@ -20,29 +32,21 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def build_session(
-    app_name: str = "pedsnetdcc_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
+def session_conf(
+    master: str,
+    shuffle_partitions: int,
     extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard config.
-
-    Scale posture: AQE enabled so runtime statistics re-plan joins
-    (broadcast conversion, skew split) after each shuffle; partition
-    coalescing keeps small-SF test runs from drowning in empty tasks
-    while leaving large runs at the configured parallelism.
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+) -> dict[str, str]:
+    """The Spark config :func:`build_session` applies; ``extra_conf``
+    wins over every engine default.  On a ``local[...]`` master the
+    Python workers run under :mod:`pedsnetdcc_spark.pyworker`, with this
+    package's parent directory merged into ``spark.executorEnv.PYTHONPATH``
+    so the workers can import it."""
+    extra_conf = dict(extra_conf or {})
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # AQE can only COALESCE shuffle partitions, never split them, so
         # the initial partition count is the hard parallelism ceiling of
         # every shuffle.  Start each shuffle 4x over-partitioned and let
@@ -54,25 +58,57 @@ def build_session(
         # small-stage runs coalesce to ~core-count partitions as before.
         # On a real cluster the submitter raises shuffle_partitions and
         # this multiplier scales with it.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(shuffle_partitions * 4),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(shuffle_partitions * 4),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # bound Arrow batch size: multimodal pipelines carry MB-scale
         # binary payloads per row, and the default 10k-row batches would
         # put gigabytes in a single python-worker transfer at 100 TB
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
+        "spark.sql.parquet.compression.codec": "zstd",
         # the harness's events table carries TIMESTAMP(NANOS) parquet
         # columns; read them as long and convert in sources.io.read_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    }
+    if master == "local" or master.startswith("local["):
+        conf["spark.python.daemon.module"] = "pedsnetdcc_spark.pyworker"
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        key = "spark.executorEnv.PYTHONPATH"
+        paths = [p for p in extra_conf.get(key, "").split(os.pathsep) if p]
+        if pkg_parent not in paths:
+            paths.append(pkg_parent)
+        extra_conf[key] = os.pathsep.join(paths)
+    conf.update(extra_conf)
+    return conf
+
+
+def build_session(
+    app_name: str = "pedsnetdcc_spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) a SparkSession with the engine's standard config
+    (:func:`session_conf`).
+
+    Scale posture: AQE enabled so runtime statistics re-plan joins
+    (broadcast conversion, skew split) after each shuffle; partition
+    coalescing keeps small-SF test runs from drowning in empty tasks
+    while leaving large runs at the configured parallelism.  Python
+    workers of a ``local[...]`` master run under the engine's daemon
+    (:mod:`pedsnetdcc_spark.pyworker`); any other master keeps Spark's
+    default daemon, because its executors may not have this package on
+    their path.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{cpus}]"
+    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

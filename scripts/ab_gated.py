@@ -41,6 +41,17 @@ def _steal_pct(before, after):
     return round(100.0 * ds / dt, 3) if dt > 0 else None
 
 
+def _last_sec(stdout: str) -> float | None:
+    """``sec`` of the last stdout line that is a JSON object holding it;
+    other lines (log text, bare JSON numbers or lists) are skipped."""
+    for line in reversed(stdout.strip().splitlines()):
+        try:
+            return float(json.loads(line)["sec"])
+        except (ValueError, KeyError, TypeError):
+            continue
+    return None
+
+
 def _arm(query: str, envvar: str, value: str, repo: str):
     env = os.environ.copy()
     env[envvar] = value
@@ -51,14 +62,7 @@ def _arm(query: str, envvar: str, value: str, repo: str):
         capture_output=True, text=True, timeout=900, env=env,
     )
     steal = _steal_pct(t0, _cpu_ticks())
-    sec = None
-    for line in reversed(proc.stdout.strip().splitlines() or [""]):
-        try:
-            sec = float(json.loads(line)["sec"])
-            break
-        except (ValueError, KeyError, json.JSONDecodeError):
-            continue
-    return sec, steal
+    return _last_sec(proc.stdout), steal
 
 
 def main() -> None:

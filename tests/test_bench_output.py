@@ -7,10 +7,11 @@ import json
 import os
 import sys
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
+from ab_gated import _last_sec  # noqa: E402
 from bench import _compact_line  # noqa: E402
 
 
@@ -168,3 +169,9 @@ def test_compact_line_carries_steal_pct():
     out2 = _fake_out(93)
     out2["steal_pct"] = {"timed": None, "isolated": None}
     assert "steal_pct" not in _compact_line(out2)
+
+
+def test_ab_gated_skips_non_object_json_lines():
+    assert _last_sec('{"sec": 1.5}\n42\n[1, 2]\nnot json\n') == 1.5
+    assert _last_sec('7\n"text"\n') is None
+    assert _last_sec("") is None

@@ -81,3 +81,21 @@ def test_connected_components_string_ids_long_chain(spark):
 def test_connected_components_empty_pairs(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(pairs).collect() == []
+
+
+def test_connected_components_non_integer_shuffle_partitions(spark, monkeypatch):
+    """Platforms that set ``spark.sql.shuffle.partitions`` to ``"auto"``
+    fall back to the default parallelism instead of raising."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    got = {r.node: r.component for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
