@@ -1099,13 +1099,12 @@ class IvfIndexHandle:
         # read-only mount to raise loudly instead.)
         _recover_ivf_compaction(path, recover=recover)
         self.cells = spark.read.parquet(_os.path.join(path, "cells"))
-        delta = _os.path.join(path, "cells_delta")
-        if _os.path.isdir(delta):
+        if _ivf_epochs(path):
             # streaming appends (stream_ivf_index_append): union the
             # epoch deltas in; the centroid_id filter pushes through
             # the union, so BOTH sides stay partition-pruned
             self.cells = self.cells.unionByName(
-                spark.read.parquet(delta).drop("epoch")
+                spark.read.parquet(_os.path.join(path, "cells_delta")).drop("epoch")
             )
 
     def probe_assignments(
@@ -1522,6 +1521,20 @@ def _recover_ivf_compaction(path: str, recover: bool = True) -> None:
         _shutil.rmtree(_os.path.join(path, leftover), ignore_errors=True)
 
 
+def _ivf_epochs(path: str) -> list[str]:
+    """The COMMITTED epoch deltas (``epoch=N`` dirs) — the IVF twin of
+    :func:`pedsnetdcc_spark.datapipe.dedup._span_index_gens`.  A crashed
+    append's dot-prefixed temp is invisible here, so a ``cells_delta``
+    holding only a stranded temp neither gets read (schema inference
+    over it fails) nor counts as a pending epoch."""
+    import os as _os
+
+    delta = _os.path.join(path, "cells_delta")
+    if not _os.path.isdir(delta):
+        return []
+    return sorted(e for e in _os.listdir(delta) if e.startswith("epoch="))
+
+
 def compact_ivf_index(spark, path: str) -> dict:
     """Fold the streaming epoch deltas back into the base cells — the
     LSM compaction step: read base ∪ delta, re-cluster by cell (one
@@ -1571,11 +1584,7 @@ def _compact_ivf_index_locked(spark, path: str) -> dict:
     _recover_ivf_compaction(path)
     cells_dir = _os.path.join(path, "cells")
     delta_dir = _os.path.join(path, "cells_delta")
-    epochs = (
-        [e for e in _os.listdir(delta_dir) if e.startswith("epoch=")]
-        if _os.path.isdir(delta_dir)
-        else []
-    )
+    epochs = _ivf_epochs(path)
     if not epochs:
         return {"cells": None, "rows": None, "epochs_folded": 0}
     base = spark.read.parquet(cells_dir)
@@ -1661,11 +1670,7 @@ def maybe_compact_ivf_index(
     from pedsnetdcc_spark.datapipe.dedup import _dir_bytes
 
     delta = _os.path.join(path, "cells_delta")
-    epochs = (
-        [e for e in _os.listdir(delta) if e.startswith("epoch=")]
-        if _os.path.isdir(delta)
-        else []
-    )
+    epochs = _ivf_epochs(path)
     reason = None
     if max_epochs is not None and len(epochs) > max_epochs:
         reason = f"epochs {len(epochs)} > {max_epochs}"
@@ -1699,13 +1704,7 @@ def next_epoch_offset(path: str) -> int:
 
     with open(_os.path.join(path, "meta.json")) as f:
         folded = _json.load(f).get("folded_through_epoch", -1)
-    delta = _os.path.join(path, "cells_delta")
-    existing = (
-        [int(e.split("=", 1)[1]) for e in _os.listdir(delta)
-         if e.startswith("epoch=")]
-        if _os.path.isdir(delta)
-        else []
-    )
+    existing = [int(e.split("=", 1)[1]) for e in _ivf_epochs(path)]
     return max([folded, *existing]) + 1
 
 

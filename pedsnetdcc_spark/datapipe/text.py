@@ -859,6 +859,12 @@ def lm_score(
     when the model corpus covers the scored corpus; scoring a foreign
     corpus drops unseen tokens from the stream (documented OOV
     behavior: use the combined corpus as ``model_df`` to avoid it).
+
+    Cache contract: the staged token tables of ``df`` (and of
+    ``model_df``, if given) are ``.cache()``-d and stay cached after the
+    call, because the returned DataFrame is lazy and still reads them.
+    Each call adds its own; they are freed only when the caller runs
+    ``spark.catalog.clearCache()`` after its last action on the result.
     """
     df = ensure_parallelism(df)
 
@@ -898,9 +904,8 @@ def lm_score(
     # scan+tokenize stage sets per run; exchange reuse cannot fold
     # them because the branch projections differ).  The staged token
     # table is cached and every stream derives from it — one tokenize
-    # pass; the cache is derived within-query data, cleared by the
-    # session's normal cache lifecycle (same pattern as the fused
-    # image-codec hash table).
+    # pass; it stays cached until the caller clears the cache (see the
+    # docstring's cache contract).
     st = _staged(df, with_id=True).cache()
     a = F.col("__a")
     d_bi = _streams(st, with_id=True)[1]

@@ -251,6 +251,14 @@ def index_writer_lock(path: str, op: str):
     store (S3/GCS) there is no exclusive create; serialize writers
     through a scheduler there, as the docstrings always required.
 
+    POSIX-only commit path: every index commit (span and IVF build,
+    append, compact and crash recovery) is this ``O_EXCL`` lock plus
+    ``os.rename`` / ``os.replace`` of a fully written dot-temp and
+    ``shutil.rmtree`` of what it replaces, all on a mounted filesystem
+    path.  Only driver-side metadata reads dispatch on the path scheme
+    (:func:`pyarrow_fs_and_path`); committing to an object-store or
+    other non-POSIX path is unsupported.
+
     Usage::
 
         with index_writer_lock(path, "append"):

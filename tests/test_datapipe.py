@@ -2062,6 +2062,39 @@ def test_ivf_index_compact_folds_delta(spark, emb, tmp_path):
     assert compact_ivf_index(spark, root)["epochs_folded"] == 0
 
 
+def test_ivf_index_ignores_orphan_epoch_tmp(spark, emb, tmp_path):
+    """A crash during an empty micro-batch leaves ``cells_delta`` holding
+    only a ``.tmp-epoch-*`` dir.  The index still opens and answers as it
+    does without the orphan, and no lifecycle step counts it as an
+    epoch."""
+    import os
+
+    from pedsnetdcc_spark.datapipe.similarity import (
+        build_ivf_index,
+        compact_ivf_index,
+        maybe_compact_ivf_index,
+        next_epoch_offset,
+        open_ivf_index,
+    )
+
+    root = str(tmp_path / "ivf")
+    build_ivf_index(emb, root, n_centroids=16, assign="flat", seed=3)
+    queries = emb.filter(F.col("vec_id") < 12)
+
+    def answer():
+        return {
+            (r["query_id"], r["rank"]): r["neighbor_id"]
+            for r in open_ivf_index(spark, root).query(queries, k=3, nprobe=4).collect()
+        }
+
+    clean = answer()
+    os.makedirs(os.path.join(root, "cells_delta", ".tmp-epoch-000000", "centroid_id=1"))
+    assert answer() == clean and len(clean) == 12 * 3
+    assert next_epoch_offset(root) == 0
+    assert not maybe_compact_ivf_index(spark, root, max_epochs=0)["triggered"]
+    assert compact_ivf_index(spark, root)["epochs_folded"] == 0
+
+
 def _dup_spans_ref(docs, k, min_count):
     """Brute-force python reference for duplicate_spans."""
     from collections import Counter

@@ -1,11 +1,13 @@
-"""The session layer: the engine's Python-worker daemon and its stat-guarded
-``zipimport`` cache (``pedsnetdcc_spark.pyworker``), and the conf that
-``build_session`` applies."""
+"""The session layer: the engine's Python-worker daemon with its stat-guarded
+``zipimport`` cache and gc-frozen, preloaded heap (``pedsnetdcc_spark.pyworker``),
+and the conf that ``build_session`` applies."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -75,18 +77,56 @@ def test_lazy_zipimport_is_left_untouched():
     assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
 
 
+def _run_python(code: str, extra_path: tuple[str, ...] = ()) -> dict:
+    """Run ``code`` in a fresh interpreter with this package importable;
+    it prints one JSON object as its last line."""
+    paths = [PKG_PARENT, *extra_path]
+    out = subprocess.run(
+        [sys.executable, "-c", code], check=True, capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": os.pathsep.join(paths)})
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_prefork_preloads_and_freezes(tmp_path):
+    """The daemon's pre-fork step imports the worker modules, skips one
+    that raises ``ImportError`` and freezes the heap; importing the
+    module does neither."""
+    (tmp_path / "pyworker_broken_dep.py").write_text("raise ImportError('no backend')\n")
+    report = """
+import gc, json, sys
+from pedsnetdcc_spark import pyworker
+{step}
+print(json.dumps({{"frozen": gc.get_freeze_count(),
+                  "loaded": [m for m in pyworker.PRELOAD if m in sys.modules],
+                  "broken": "pyworker_broken_dep" in sys.modules}}))
+"""
+    imported = _run_python(report.format(step=""))
+    assert imported == {"frozen": 0, "loaded": [], "broken": False}
+
+    forked = _run_python(
+        report.format(step="pyworker.PRELOAD = ('pyworker_broken_dep',) + pyworker.PRELOAD\n"
+                           "pyworker._prefork()"),
+        extra_path=(str(tmp_path),))
+    assert forked["frozen"] > 0
+    assert forked["loaded"] == list(pyworker.PRELOAD)
+    assert "pandas" in forked["loaded"] and not forked["broken"]
+
+
 def test_python_workers_run_guarded_daemon(spark):
     """Every partition of a pandas UDF runs in a worker whose
-    ``invalidate_caches`` is the engine's guard, and the UDF's values
-    are those of a plain column expression."""
-    @pandas_udf("struct<v:long,guarded:boolean>")
+    ``invalidate_caches`` is the engine's guard and whose heap was frozen
+    before the fork, and the UDF's values are those of a plain column
+    expression."""
+    @pandas_udf("struct<v:long,guarded:boolean,frozen:boolean>")
     def probe(s: pd.Series) -> pd.DataFrame:
+        import gc
         import zipimport
 
         code = getattr(zipimport.zipimporter.invalidate_caches, "__code__", None)
         guarded = code is not None and code.co_filename.endswith(
             os.path.join("pedsnetdcc_spark", "pyworker.py"))
-        return pd.DataFrame({"v": s * 3 + 1, "guarded": guarded})
+        return pd.DataFrame({"v": s * 3 + 1, "guarded": guarded,
+                             "frozen": gc.get_freeze_count() > 0})
 
     n_parts = 16
     df = spark.range(0, 400, numPartitions=n_parts).select(
@@ -94,6 +134,7 @@ def test_python_workers_run_guarded_daemon(spark):
     rows = df.collect()
     assert {r.p for r in rows} == set(range(n_parts))
     assert [r.r.v for r in rows] == [r.id * 3 + 1 for r in rows]
+    assert all(r.r.frozen for r in rows)
     if EAGER_REREAD:
         assert all(r.r.guarded for r in rows)
 
@@ -123,3 +164,10 @@ def test_session_conf_merges_caller_pythonpath_and_caller_wins():
 
     already = session_conf("local", 4, {"spark.executorEnv.PYTHONPATH": PKG_PARENT})
     assert already["spark.executorEnv.PYTHONPATH"] == PKG_PARENT
+
+
+def test_idle_streams_poll_every_100ms_on_every_master():
+    for master in ("local[4]", "local", "yarn", "spark://host:7077"):
+        assert session_conf(master, 8)["spark.sql.streaming.pollingDelay"] == "100ms"
+    conf = session_conf("local[2]", 4, {"spark.sql.streaming.pollingDelay": "10ms"})
+    assert conf["spark.sql.streaming.pollingDelay"] == "10ms"
